@@ -1,6 +1,7 @@
 """Extraction stage: transcripts -> extracted_turns.
 
-All columns are JVM expressions (whole-stage codegen; no Python).
+Every column but text_clean (an Arrow-batched UDF) is a JVM
+expression (whole-stage codegen; no Python).
 This is the narrow, embarrassingly-parallel stage — it runs before any
 shuffle, so Catalyst keeps it pipelined with the parquet scan and the
 `text` column is pruned as soon as `text_clean` is derived.
@@ -10,11 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.cleaning import (
-    clean_text_expr,
-    clean_text_pandas_udf,
-    layout_hints_expr,
-)
+from ..functions.cleaning import clean_text_pandas_udf, layout_hints_expr
 from ..functions.confidence import confidence_expr
 from ..functions.dates import extracted_date_expr, is_visit_boundary_expr
 from ..functions.sections import sections_expr
@@ -25,25 +22,21 @@ from ..functions.tokens import (
 )
 
 
-def extract_turns(transcripts: DataFrame, with_sections: bool = True,
-                  arrow_extractor: bool = True) -> DataFrame:
+def extract_turns(transcripts: DataFrame,
+                  with_sections: bool = True) -> DataFrame:
     """Per-turn extraction: clean text, confidence, uncertainty, review
     flags, layout hints, boundary flag, extracted date, section spans.
 
-    arrow_extractor=True (default) runs the boilerplate-strip pass as an
-    Arrow-batched pandas UDF — the north-star extractor shape.  Besides
-    sharing literally the same implementation as the pytest oracle, the
-    ArrowEvalPython node materializes text_clean as a real column, so
-    the dozen downstream expressions consume an attribute instead of
-    having the (expensive) cleaning expression inlined into each of
-    them by CollapseProject.  arrow_extractor=False uses the pure-JVM
-    expression (same semantics — tested equal); it is the right choice
-    when a single cheap consumer follows."""
-    if arrow_extractor:
-        cleaner = clean_text_pandas_udf()
-        df = transcripts.withColumn("text_clean", cleaner(F.col("text")))
-    else:
-        df = transcripts.withColumn("text_clean", clean_text_expr(F.col("text")))
+    The boilerplate-strip pass runs as an Arrow-batched pandas UDF — the
+    north-star extractor shape.  Besides sharing literally the same
+    implementation as the pytest oracle, the ArrowEvalPython node
+    materializes text_clean as a real column, so the dozen downstream
+    expressions consume an attribute instead of having the (expensive)
+    cleaning expression inlined into each of them by CollapseProject.
+    functions.cleaning.clean_text_expr is the pure-JVM twin (same
+    semantics — tested equal), for a single cheap consumer."""
+    df = transcripts.withColumn("text_clean",
+                                clean_text_pandas_udf()(F.col("text")))
     c = F.col("text_clean")
     df = (
         df.withColumn("confidence", confidence_expr(c))

@@ -9,8 +9,9 @@ clinical sections in the reference's render order
 list, results, assessment, plan), and the data-quality notes page
 (docx_renderer.py:335-360).  reportlab / python-docx are presentation
 chrome; the narrative CONTENT is what the engine owes, so the document
-is a plain-text string column built with the same fused one-groupBy
-aggregation as the XML entity renderer — written like any other sink.
+is a plain-text string column whose per-visit sections come from the
+one-groupBy section engine shared with the XML renderer
+(renderers/sections.py) — written like any other sink.
 
 Determinism deltas vs the reference, by design: no wall-clock
 "Generated:" stamp (the reference prints processed_at /
@@ -23,7 +24,12 @@ from __future__ import annotations
 from ..functions.cleaning import strip_ws
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .xml import _na
+from .sections import (
+    SectionKind,
+    fused_sections,
+    single_value_vitals,
+    visit_text_rows,
+)
 
 DISCLAIMER = (
     "IMPORTANT: This document was generated from OCR-processed scanned "
@@ -46,6 +52,12 @@ def _page_suffix() -> Column:
         F.col("source_page").isNotNull(),
         F.format_string(" [Page %d]", F.col("source_page")),
     ).otherwise(F.lit(""))
+
+
+def _na(col: Column) -> Column:
+    """'' / null -> N/A fallback (docx_renderer.py `or 'N/A'`); plain
+    text, so the value renders unescaped."""
+    return F.when(col.isNull() | (col == ""), F.lit("N/A")).otherwise(col)
 
 
 def _medication_row() -> Column:
@@ -108,6 +120,11 @@ def _plan_row() -> Column:
     )
 
 
+def _kind(rows: DataFrame | None, row: Column, title: str) -> SectionKind:
+    return SectionKind(rows, row, lambda b: F.concat(F.lit(title + "\n"), b),
+                       "\n")
+
+
 def narrative_sections(medications: DataFrame | None = None,
                        problems: DataFrame | None = None,
                        vitals: DataFrame | None = None,
@@ -117,72 +134,21 @@ def narrative_sections(medications: DataFrame | None = None,
     """(conv_id, visit_id, sections_text): per-visit clinical sections
     in the reference's DOCX render order (docx_renderer.py:176-183);
     absent sections are skipped like the reference's early returns.
-
-    Same fused plan as xml.entity_sections: rows are rendered per kind
-    BEFORE a union-with-kind-rank, so every section comes out of ONE
-    groupBy (conv_id, visit_id) aggregation — one shuffle total."""
-    kinds = []  # (rank, rows with rendered _row, (title, sep))
-    mk = lambda df, rank, row: df.select(  # noqa: E731
-        "conv_id", "visit_id",
-        F.lit(rank).alias("_rank"),
-        F.col("source_page").cast("int").alias("source_page"),
-        F.col("source_line_in_turn").cast("int").alias("source_line_in_turn"),
-        row.alias("_row"),
-    )
-
-    def text_kind(rank, field, title):
-        rows = visit_texts.filter(F.col("field") == field).select(
-            "conv_id", "visit_id", "source_page", "source_line_in_turn",
-            F.col("text").alias("_t"),
-        )
-        kinds.append((rank, mk(rows, rank, F.col("_t")), (title, "\n")))
-
-    if visit_texts is not None:
-        text_kind(0, "reason_for_visit", "REASON FOR VISIT")
-        text_kind(1, "history_of_present_illness",
-                  "HISTORY OF PRESENT ILLNESS")
-    if medications is not None:
-        kinds.append((2, mk(medications, 2, _medication_row()),
-                      ("MEDICATIONS", "\n")))
-    if vitals is not None:
-        kinds.append((3, mk(vitals.filter(F.col("value").isNotNull()), 3,
-                            _vital_row()),
-                      ("VITAL SIGNS", "\n")))
-    if problems is not None:
-        kinds.append((4, mk(problems, 4, _problem_row()),
-                      ("PROBLEM LIST", "\n")))
-    if results is not None:
-        kinds.append((5, mk(results, 5, _result_row()),
-                      ("LAB RESULTS", "\n")))
-    if visit_texts is not None:
-        text_kind(6, "assessment", "ASSESSMENT")
-    if plan is not None:
-        kinds.append((7, mk(plan, 7, _plan_row()), ("PLAN OF CARE", "\n")))
-    if not kinds:
-        raise ValueError("at least one entity DataFrame is required")
-
-    union = kinds[0][1]
-    for _, df, _spec in kinds[1:]:
-        union = union.unionByName(df)
-    agg = union.groupBy("conv_id", "visit_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("_rank", "source_page", "source_line_in_turn", "_row")
-            )
-        ).alias("_rows")
-    )
-    sections = []
-    for rank, _df, (title, sep) in kinds:
-        of_kind = F.filter(F.col("_rows"), lambda r: r["_rank"] == rank)
-        body = F.array_join(F.transform(of_kind, lambda r: r["_row"]), sep)
-        sections.append(
-            F.when(F.size(of_kind) > 0,
-                   F.concat(F.lit(title + "\n"), body))
-        )
-    return agg.select(
-        "conv_id", "visit_id",
-        F.concat_ws("\n\n", *sections).alias("sections_text"),
-    )
+    One groupBy for all sections: see sections.fused_sections."""
+    text = F.col("text")
+    return fused_sections([
+        _kind(visit_text_rows(visit_texts, "reason_for_visit"), text,
+              "REASON FOR VISIT"),
+        _kind(visit_text_rows(visit_texts, "history_of_present_illness"),
+              text, "HISTORY OF PRESENT ILLNESS"),
+        _kind(medications, _medication_row(), "MEDICATIONS"),
+        _kind(single_value_vitals(vitals), _vital_row(), "VITAL SIGNS"),
+        _kind(problems, _problem_row(), "PROBLEM LIST"),
+        _kind(results, _result_row(), "LAB RESULTS"),
+        _kind(visit_text_rows(visit_texts, "assessment"), text,
+              "ASSESSMENT"),
+        _kind(plan, _plan_row(), "PLAN OF CARE"),
+    ], "\n\n", "sections_text")
 
 
 def render_narrative(visits: DataFrame, sections: DataFrame | None = None,

@@ -6,11 +6,20 @@ structuredBody with one component per visit.  Built entirely with
 concat/format_string over the visit rollup — the XML is a string
 column, written like any other sink.  No document id from wall-clock
 (the reference stamps datetime.now(); we use conv_id for determinism).
+The per-visit entity sections come from the section engine this
+renderer shares with the narrative renderer (renderers/sections.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from .sections import (
+    SectionKind,
+    fused_sections,
+    single_value_vitals,
+    visit_text_rows,
+)
 
 HL7_NAMESPACE = "urn:hl7-org:v3"
 ROOT_OID = "2.16.840.1.113883.1.3"
@@ -150,21 +159,6 @@ def _section_xml(code: str, display: str, title: str, body: Column) -> Column:
     )
 
 
-def _agg_rows(df: DataFrame, row: Column, sep: str = "") -> DataFrame:
-    """(conv_id, visit_id, xml): document-order concatenation of rendered
-    rows — sort key (source_page, source_line_in_turn) mirrors the
-    reference's list order."""
-    order = F.struct(
-        F.col("source_page"), F.col("source_line_in_turn"), row.alias("r")
-    )
-    return df.groupBy("conv_id", "visit_id").agg(
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(order)), lambda s: s["r"]),
-            sep,
-        ).alias("xml")
-    )
-
-
 def _coded_entry(text_col: Column, code_map: list[tuple[str, str]],
                  system: str) -> Column:
     """First-match substring code lookup -> <entry> element or ''
@@ -202,18 +196,6 @@ def _problem_row() -> Column:
     )
 
 
-def problem_section(problems: DataFrame) -> DataFrame:
-    """Problem List (LOINC 11450-4, xml_renderer.py:252-279) + SNOMED
-    coded entries.  Expects extract_problems/dedup output columns."""
-    agg = _agg_rows(problems, _problem_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("11450-4", "Problem List", "Problem List",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("problems_xml"),
-    )
-
-
 _MED_HEADER = (
     "<thead><tr><th>Medication</th><th>Dose</th><th>Frequency</th>"
     "<th>Route</th><th>Source Page</th></tr></thead>"
@@ -229,19 +211,6 @@ def _medication_row() -> Column:
     )
 
 
-def medication_section(medications: DataFrame) -> DataFrame:
-    """Medication History (LOINC 10160-0, xml_renderer.py:281-326)."""
-    agg = _agg_rows(medications, _medication_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml(
-            "10160-0", "Medication History", "Medications",
-            F.format_string("<table>%s<tbody>%s</tbody></table>",
-                            F.lit(_MED_HEADER), F.col("xml")),
-        ).alias("medications_xml"),
-    )
-
-
 def _vital_row() -> Column:
     num = F.when(
         F.col("value") == F.floor("value"),
@@ -253,19 +222,6 @@ def _vital_row() -> Column:
             "%s: %s %s", xml_escape(F.col("vital_name")), num,
             xml_escape(F.coalesce(F.col("unit"), F.lit(""))),
         )),
-    )
-
-
-def vitals_section(vitals: DataFrame) -> DataFrame:
-    """Vital Signs (LOINC 8716-3, xml_renderer.py:328-353).  Like the
-    reference, only single-value vitals render as list items (its loop
-    requires vital_data['value'], which blood_pressure lacks)."""
-    agg = _agg_rows(vitals.filter(F.col("value").isNotNull()), _vital_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("8716-3", "Vital Signs", "Vital Signs",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("vitals_xml"),
     )
 
 
@@ -294,20 +250,6 @@ def _result_row() -> Column:
     )
 
 
-def results_section(results: DataFrame) -> DataFrame:
-    """Results (LOINC 30954-2, xml_renderer.py:355-403; flag fallback
-    'normal') + LOINC coded entries."""
-    agg = _agg_rows(results, _result_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml(
-            "30954-2", "Relevant diagnostic tests/laboratory data", "Results",
-            F.format_string("<table>%s<tbody>%s</tbody></table>",
-                            F.lit(_RESULT_HEADER), F.col("xml")),
-        ).alias("results_xml"),
-    )
-
-
 def _plan_row() -> Column:
     item = F.concat(
         xml_escape(F.col("action")),
@@ -321,15 +263,21 @@ def _plan_row() -> Column:
     return F.format_string("<item>%s</item>", item)
 
 
-def plan_section(plan: DataFrame) -> DataFrame:
-    """Plan of Care (LOINC 18776-5, xml_renderer.py:424-453)."""
-    agg = _agg_rows(plan, _plan_row())
-    return agg.select(
-        "conv_id", "visit_id",
-        _section_xml("18776-5", "Plan of Care", "Plan",
-                     F.format_string("<list>%s</list>", F.col("xml"))
-                     ).alias("plan_xml"),
-    )
+def _kind(rows: DataFrame | None, row: Column, code: str, display: str,
+          title: str, body=lambda b: b, sep: str = "") -> SectionKind:
+    """A section kind rendered as a LOINC-coded component; `body` wraps
+    the joined rows (the escaped text of a text kind IS the body)."""
+    return SectionKind(
+        rows, row, lambda b: _section_xml(code, display, title, body(b)), sep)
+
+
+def _list(body: Column) -> Column:
+    return F.format_string("<list>%s</list>", body)
+
+
+def _table(header: str):
+    return lambda body: F.format_string(
+        "<table>%s<tbody>%s</tbody></table>", F.lit(header), body)
 
 
 def entity_sections(medications: DataFrame | None = None,
@@ -344,89 +292,30 @@ def entity_sections(medications: DataFrame | None = None,
     xml_renderer.py:205-212); absent sections are skipped the way the
     reference's early returns skip empty lists (concat_ws drops nulls).
     `visit_texts` is entities.extract_visit_texts output (long form
-    with a `field` column) feeding the three text sections.
-
-    Fused plan: rows are rendered per kind BEFORE a union-with-kind-rank,
-    so every section comes out of ONE groupBy (conv_id, visit_id)
-    aggregation — one shuffle instead of per-kind aggs + full-outer
-    joins (measured 15 exchanges -> 2 on the contract query)."""
-    kinds = []  # (rank, rows with rendered _row, (code,display,title,wrap,sep))
-    mk = lambda df, rank, row: df.select(  # noqa: E731
-        "conv_id", "visit_id",
-        F.lit(rank).alias("_rank"),
-        F.col("source_page").cast("int").alias("source_page"),
-        F.col("source_line_in_turn").cast("int").alias("source_line_in_turn"),
-        row.alias("_row"),
-    )
-    list_wrap = lambda body: F.format_string("<list>%s</list>", body)  # noqa: E731
-    text_wrap = lambda body: body  # noqa: E731  (escaped text IS the body)
-
-    def text_kind(rank, field, code, display, title):
-        rows = visit_texts.filter(F.col("field") == field).select(
-            "conv_id", "visit_id", "source_page", "source_line_in_turn",
-            xml_escape(F.col("text")).alias("_t"),
-        )
-        kinds.append((rank, mk(rows, rank, F.col("_t")),
-                      (code, display, title, text_wrap, "\n")))
-
-    if visit_texts is not None:
+    with a `field` column) feeding the three text sections.  One
+    groupBy for all sections: see sections.fused_sections."""
+    text = xml_escape(F.col("text"))
+    return fused_sections([
         # xml_renderer.py:214-232 — Reason for Visit, HPI
-        text_kind(0, "reason_for_visit", "29299-5", "Reason for visit",
-                  "Reason for Visit")
-        text_kind(1, "history_of_present_illness", "10164-2",
-                  "History of Present Illness", "History of Present Illness")
-    if problems is not None:
-        kinds.append((2, mk(problems, 2, _problem_row()),
-                      ("11450-4", "Problem List", "Problem List",
-                       list_wrap, "")))
-    if medications is not None:
-        kinds.append((3, mk(medications, 3, _medication_row()),
-                      ("10160-0", "Medication History", "Medications",
-                       lambda b: F.format_string(
-                           "<table>%s<tbody>%s</tbody></table>",
-                           F.lit(_MED_HEADER), b), "")))
-    if vitals is not None:
-        kinds.append((4, mk(vitals.filter(F.col("value").isNotNull()), 4,
-                            _vital_row()),
-                      ("8716-3", "Vital Signs", "Vital Signs", list_wrap, "")))
-    if results is not None:
-        kinds.append((5, mk(results, 5, _result_row()),
-                      ("30954-2", "Relevant diagnostic tests/laboratory data",
-                       "Results",
-                       lambda b: F.format_string(
-                           "<table>%s<tbody>%s</tbody></table>",
-                           F.lit(_RESULT_HEADER), b), "")))
-    if visit_texts is not None:
+        _kind(visit_text_rows(visit_texts, "reason_for_visit"), text,
+              "29299-5", "Reason for visit", "Reason for Visit", sep="\n"),
+        _kind(visit_text_rows(visit_texts, "history_of_present_illness"),
+              text, "10164-2", "History of Present Illness",
+              "History of Present Illness", sep="\n"),
+        _kind(problems, _problem_row(), "11450-4", "Problem List",
+              "Problem List", _list),
+        _kind(medications, _medication_row(), "10160-0",
+              "Medication History", "Medications", _table(_MED_HEADER)),
+        _kind(single_value_vitals(vitals), _vital_row(), "8716-3",
+              "Vital Signs", "Vital Signs", _list),
+        _kind(results, _result_row(), "30954-2",
+              "Relevant diagnostic tests/laboratory data", "Results",
+              _table(_RESULT_HEADER)),
         # xml_renderer.py:405-422 — Assessment
-        text_kind(6, "assessment", "51848-0", "Assessment", "Assessment")
-    if plan is not None:
-        kinds.append((7, mk(plan, 7, _plan_row()),
-                      ("18776-5", "Plan of Care", "Plan", list_wrap, "")))
-    if not kinds:
-        raise ValueError("at least one entity DataFrame is required")
-
-    union = kinds[0][1]
-    for _, df, _spec in kinds[1:]:
-        union = union.unionByName(df)
-    agg = union.groupBy("conv_id", "visit_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("_rank", "source_page", "source_line_in_turn", "_row")
-            )
-        ).alias("_rows")
-    )
-    sections = []
-    for rank, _df, (code, display, title, wrap, sep) in kinds:
-        of_kind = F.filter(F.col("_rows"), lambda r: r["_rank"] == rank)
-        body = F.array_join(F.transform(of_kind, lambda r: r["_row"]), sep)
-        sections.append(
-            F.when(F.size(of_kind) > 0,
-                   _section_xml(code, display, title, wrap(body)))
-        )
-    return agg.select(
-        "conv_id", "visit_id",
-        F.concat_ws("\n", *sections).alias("sections_xml"),
-    )
+        _kind(visit_text_rows(visit_texts, "assessment"), text, "51848-0",
+              "Assessment", "Assessment", sep="\n"),
+        _kind(plan, _plan_row(), "18776-5", "Plan of Care", "Plan", _list),
+    ], "\n", "sections_xml")
 
 
 def demographics_xml(patients: DataFrame) -> DataFrame:

@@ -98,6 +98,28 @@ def test_section_rows_in_document_order(spark):
     assert body.index("zzz first") < body.index("aaa zebra")
 
 
+def test_reserved_characters_render_literally(spark):
+    """The narrative is plain text: reserved XML characters in the
+    N/A-fallback cells render as written, not as XML entities."""
+    meds = spark.createDataFrame(
+        [("c1", "visit_001", "Morphine", "2mg", "q4h & prn", None, 1, 1)],
+        "conv_id string, visit_id string, name string, dose string, "
+        "frequency string, route string, source_page int, "
+        "source_line_in_turn int",
+    )
+    labs = spark.createDataFrame(
+        [("c1", "visit_001", "glucose", "95", '"mg/dL"', "<100", None, 2, 1)],
+        "conv_id string, visit_id string, test_name string, value string, "
+        "unit string, reference_range string, abnormal_flag string, "
+        "source_page int, source_line_in_turn int",
+    )
+    body = rt.narrative_sections(medications=meds, results=labs) \
+        .first()["sections_text"]
+    assert "Frequency: q4h & prn" in body
+    assert '• glucose: 95 "mg/dL" (ref: <100, normal) [Page 2]' in body
+    assert "&amp;" not in body and "&lt;" not in body
+
+
 def test_dedup_carries_line_ordinal(spark):
     """dedup_entities output keeps the kept (base) record's
     source_line_in_turn so renderers can sort same-page entities in

@@ -6,6 +6,13 @@ import os
 from pyspark.sql import functions as F
 
 from medical_pdf__ocr_structured_ccd_ccda_output_spark import fixtures
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.cleaning import (
+    clean_text_expr,
+    clean_text_pandas_udf,
+)
+from medical_pdf__ocr_structured_ccd_ccda_output_spark.functions.confidence import (
+    confidence_expr,
+)
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.extract import extract_turns
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.operators.sessionize import assign_visits
 from medical_pdf__ocr_structured_ccd_ccda_output_spark.plans.inspect import (
@@ -43,11 +50,16 @@ def test_extraction_shuffle_budget(spark, tmp_path):
 
 
 def test_extractor_variants_agree(spark):
+    """extract_turns' Arrow cleaning UDF and its pure-JVM twin
+    clean_text_expr agree, and so does the confidence scored on each."""
     df = fixtures.transcripts_spark_df(spark, 15, seed=3)
-    a = extract_turns(df, with_sections=False, arrow_extractor=True) \
-        .select("conv_id", "turn_idx", "text_clean", "confidence")
-    b = extract_turns(df, with_sections=False, arrow_extractor=False) \
-        .select("conv_id", "turn_idx", "text_clean", "confidence")
+
+    def scored(clean):
+        return df.select("conv_id", "turn_idx", clean.alias("text_clean")) \
+            .withColumn("confidence", confidence_expr(F.col("text_clean")))
+
+    a = scored(clean_text_pandas_udf()(F.col("text")))
+    b = scored(clean_text_expr(F.col("text")))
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
